@@ -1697,7 +1697,13 @@ def _two_phase_rank(
     # below the explicit exchange partial-aggregates map-side, so the
     # offsets branch shuffles <= nb rows per task instead of riding
     # the full-width REPARTITION_BY_COL exchange (guide §2.3
-    # "aggregate before you shuffle")
+    # "aggregate before you shuffle").  Tradeoff: the two branches no
+    # longer share the exchange, so an uncached base input is scanned
+    # twice (a second full orders scan in q198; q196's rfm cache keeps
+    # its scan single) — still the measured net win over shipping the
+    # input through a second full-width exchange.  Re-unifying the
+    # branches brings that exchange back; caching ``pre`` trades the
+    # second scan for a cache fill.
     bincnt = pre.groupBy("_bin").agg(F.count(F.lit(1)).alias("_bc"))
     woff = Window.orderBy("_bin").rowsBetween(Window.unboundedPreceding, -1)
     # the offsets window IS unpartitioned — over the bin-count table,

@@ -14,6 +14,14 @@ equivalent is a ``SparkSession`` configured once.  Scale posture:
 - S3A settings are applied only when requested: on a real deployment
   the magic committer removes the rename bottleneck on S3 writes,
   which is the single biggest S3-write scale trap.
+- Streaming conf is per query, not session-wide: the engine's stream
+  starters (``sources.io._start_stream``) give local-filesystem
+  checkpoints Spark's FileSystem-based checkpoint manager — the
+  default FileContext one forks `readlink` processes per rename
+  without the native Hadoop library — and run the complete-mode
+  materialized view on one state partition, since it rewrites its
+  whole state every trigger anyway.  Batch queries are unaffected.
+  Known limit: every local file create still forks a `chmod`.
 """
 
 from __future__ import annotations

@@ -24,7 +24,10 @@ pruning apply; paths may be ``s3a://`` URIs unchanged.
 from __future__ import annotations
 
 import os
+import threading
+from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -617,7 +620,74 @@ def start_text_stream_sink(
     )
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    return writer.start()
+    return _start_stream(df.sparkSession, writer, checkpoint)
+
+
+# Spark's default checkpoint manager renames through Hadoop's
+# FileContext; without the native libhadoop, the local filesystem forks
+# `readlink` processes on every such rename (4-8 per commit, tens of ms
+# each).  The FileSystem-based manager renames with an existence check
+# plus a plain File.renameTo — the same no-overwrite guarantee, since
+# Hadoop's local AbstractFileSystem.renameInternal also only checks for
+# the target first.  HDFS and S3A keep Spark's default manager.
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_START_LOCK = threading.Lock()
+_INIT_TIMEOUT_MS = 60_000
+
+
+def _checkpoint_scheme(spark: SparkSession, checkpoint: str) -> str:
+    """Filesystem scheme a checkpoint path resolves to; a path without
+    one resolves against Hadoop's ``fs.defaultFS`` like Spark does."""
+    scheme = urlparse(checkpoint).scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        scheme = urlparse(default_fs or "file:///").scheme
+    return scheme.lower()
+
+
+def _start_stream(
+    spark: SparkSession, writer, checkpoint: str, conf: dict[str, str] | None = None
+):
+    """``writer.start()`` with per-query SQL conf set on the session
+    only until the query has initialized: ``conf``, plus the fork-free
+    checkpoint manager when ``checkpoint`` is on the local filesystem.
+
+    Scoping works because Spark clones the session in the
+    StreamExecution constructor (inside ``start()``) and opens the
+    offset, commit and sink logs there too; the state store and every
+    batch run on the clone.  The sources and their metadata logs are
+    created from the caller's session on the stream thread after
+    ``start()`` returns, so the overrides stay until the query signals
+    initialization.  ``spark.sql.shuffle.partitions`` is also recorded
+    in the checkpoint's offset metadata, so a restarted query keeps the
+    count it was created with whatever is passed here.  The lock
+    serializes starts through this helper; another thread planning a
+    query on the same session during a start sees the overrides.
+    """
+    overrides = dict(conf or {})
+    if _checkpoint_scheme(spark, checkpoint) == "file":
+        overrides[_CHECKPOINT_MANAGER_KEY] = _FS_CHECKPOINT_MANAGER
+    with _START_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in overrides}
+        try:
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            query = writer.start()
+            try:
+                query._jsq.streamingQuery().awaitInitialization(_INIT_TIMEOUT_MS)
+            except Py4JJavaError:
+                pass  # died initializing: query.exception() reports it
+            return query
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> DataFrame:

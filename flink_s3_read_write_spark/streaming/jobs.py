@@ -31,6 +31,16 @@ Checkpointing: every sink in this module requires a
 checkpoint manifest, giving exactly-once output — strictly stronger
 than the reference, which never calls ``enableCheckpointing`` and is
 at-most-once on restart (SURVEY.md §2.2).
+
+Per-trigger cost: a micro-batch's latency floor is its fixed commits
+(offset WAL, commit log, sink log, state-store delta).  The sinks
+started here go through ``sources.io._start_stream``, which gives a
+query checkpointed on the local filesystem Spark's FileSystem-based
+checkpoint manager: the default FileContext manager forks `readlink`
+processes on every rename when the native Hadoop library is absent.
+HDFS and S3A checkpoints keep Spark's default manager.  Known limit:
+Hadoop's local filesystem still forks one `chmod` per file it creates;
+only the native library removes that.
 """
 
 from __future__ import annotations
@@ -40,7 +50,7 @@ from pyspark.sql import functions as F
 
 from flink_s3_read_write_spark.operators import raw_text
 from flink_s3_read_write_spark.functions.numeric import davg
-from flink_s3_read_write_spark.sources.io import read_text_lines
+from flink_s3_read_write_spark.sources.io import _start_stream, read_text_lines
 
 
 def uppercase_stream(spark: SparkSession, in_path: str) -> DataFrame:
@@ -289,6 +299,13 @@ def start_materialized_view(
     ``trigger_seconds=None`` runs availableNow (drain the backlog and
     stop — batch-refresh semantics); a value runs continuously on that
     processing-time cadence.
+
+    The aggregate's state runs on ONE shuffle partition: complete mode
+    re-emits and rewrites the whole state every trigger, so the view
+    is bounded by what one task rewrites anyway, and each extra
+    partition only adds a task, a state delta file and a checksum file
+    per batch.  The override is scoped to this query; a checkpoint
+    created with more partitions keeps the count it recorded.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -313,7 +330,9 @@ def start_materialized_view(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_stream(
+        agg.sparkSession, writer, checkpoint, {"spark.sql.shuffle.partitions": "1"}
+    )
 
 
 def cooccurrence_stream(spark: SparkSession, in_path: str) -> DataFrame:
@@ -512,4 +531,4 @@ def start_jdbc_upsert_sink(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_stream(updates.sparkSession, writer, checkpoint)

@@ -121,6 +121,95 @@ def test_streaming_text_sink_checkpointed(spark, tmp_path):
     assert glob.glob(ckpt + "/*"), "checkpoint directory must be populated"
 
 
+class _RecordingWriter:
+    """Stands in for a DataStreamWriter and the query it starts:
+    records the session's conf at ``start()`` and when the helper waits
+    for the query's initialization, instead of starting a query."""
+
+    def __init__(self, spark, keys, fail=False):
+        self.spark, self.keys, self.fail, self.seen = spark, keys, fail, []
+        self._jsq = self
+
+    def _record(self):
+        self.seen.append({k: self.spark.conf.get(k, None) for k in self.keys})
+
+    def start(self):
+        self._record()
+        if self.fail:
+            raise RuntimeError("start failed")
+        return self
+
+    def streamingQuery(self):
+        return self
+
+    def awaitInitialization(self, timeout_ms):
+        self._record()
+
+
+def _session_conf(spark) -> dict:
+    return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+
+
+@pytest.mark.parametrize(
+    "checkpoint, local",
+    [
+        ("/tmp/ckpt", True),
+        ("relative/ckpt", True),
+        ("file:/tmp/ckpt", True),
+        ("file:///tmp/ckpt", True),
+        ("hdfs://nn:8020/ckpt", False),
+        ("s3a://bucket/ckpt", False),
+    ],
+)
+def test_start_stream_scopes_checkpoint_manager_by_scheme(spark, checkpoint, local):
+    """Local checkpoints start under the FileSystem-based checkpoint
+    manager, HDFS and S3A under Spark's default; either way the
+    session conf is the same after the start as before it."""
+    key, part = io._CHECKPOINT_MANAGER_KEY, "spark.sql.shuffle.partitions"
+    before = _session_conf(spark)
+    w = _RecordingWriter(spark, [key, part])
+    assert io._start_stream(spark, w, checkpoint, {part: "1"}) is w
+    want = {key: io._FS_CHECKPOINT_MANAGER if local else None, part: "1"}
+    assert w.seen == [want, want]  # at start() and at initialization
+    assert _session_conf(spark) == before
+
+
+def test_local_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
+    """Every metadata log of a query started through the engine — the
+    offset and commit logs, the source log (opened on the stream thread
+    after ``start()`` returns) and the file sink log — runs on the
+    FileSystem-based manager, while the session keeps Spark's default."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    spark.createDataFrame([("a",)], "value string").write.text(src)
+    q = io.start_text_stream_sink(jobs.uppercase_stream(spark, src), out, ckpt, trigger_seconds=0)
+    try:
+        q.processAllAvailable()
+        se = q._jsq.streamingQuery()
+
+        def field(obj, name):
+            f = obj.getClass().getDeclaredField(name)
+            f.setAccessible(True)
+            return f.get(obj)
+
+        logs = [se.offsetLog(), se.commitLog(), field(se.sink(), "fileLog")]
+        logs += [field(se.sources().apply(i), "metadataLog") for i in range(se.sources().size())]
+        assert len(logs) == 4
+        for log in logs:
+            assert log.fileManager().getClass().getName() == io._FS_CHECKPOINT_MANAGER
+    finally:
+        q.stop()
+    assert spark.conf.get(io._CHECKPOINT_MANAGER_KEY, None) is None
+
+
+def test_start_stream_restores_conf_when_start_fails(spark):
+    before = _session_conf(spark)
+    w = _RecordingWriter(spark, [io._CHECKPOINT_MANAGER_KEY], fail=True)
+    with pytest.raises(RuntimeError, match="start failed"):
+        io._start_stream(spark, w, "/tmp/ckpt", {"spark.sql.shuffle.partitions": "1"})
+    assert w.seen == [{io._CHECKPOINT_MANAGER_KEY: io._FS_CHECKPOINT_MANAGER}]
+    assert _session_conf(spark) == before
+
+
 def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
     src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
     df = io.load_table(spark, sf_dir, "lineitem")

@@ -797,15 +797,14 @@ def test_two_phase_offsets_branch_aggregates_below_the_exchange(spark, sf_dir):
     count was grouped off the repartitioned frame)."""
     from flink_s3_read_write_spark.queries import registry
 
-    for name in ("q132_ntile_deciles", "q198_pps_systematic_sample"):
+    # q196's rfm aggregates partial-aggregate on their own, so for it
+    # the single REPARTITION_BY_COL node is the discriminating pin
+    for name in (
+        "q132_ntile_deciles", "q196_rfm_segmentation", "q198_pps_systematic_sample",
+    ):
         plan = P.formatted_plan(registry()[name].fn(spark, sf_dir))
         assert P.count(plan, "REPARTITION_BY_COL") == 1, (name, plan)
         assert P.has(plan, "partial_count") or P.has(plan, "partial_sum"), (name, plan)
-    # q196's two REPARTITION_BY_COL consumers collapse to one at
-    # runtime via the rfm cache; its cold plan inlines the subtree, so
-    # pin only that no repartition feeds a grouped count directly
-    plan = P.formatted_plan(registry()["q196_rfm_segmentation"].fn(spark, sf_dir))
-    assert P.count(plan, "REPARTITION_BY_COL") == 1, plan
 
 
 def test_q197_min_cost_frontier_broadcasts_onto_cached_edges(spark, sf_dir):

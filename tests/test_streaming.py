@@ -5,6 +5,7 @@ re-emission works, and the watermark drops late data (SURVEY.md
 
 from __future__ import annotations
 
+import os
 import time
 from datetime import datetime, timedelta
 
@@ -25,8 +26,6 @@ def sf_dir() -> str:
     dir> pytest tests/test_streaming.py`` (r13; recorded in
     SCALE.md).  Golden-value tests elsewhere keep the deterministic
     sf0.001 corpus regardless of the env var."""
-    import os
-
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF0001)
 
 
@@ -43,6 +42,23 @@ def wait_for(predicate, timeout_s: float = 60.0) -> None:
             return
         time.sleep(0.5)
     raise AssertionError("condition not reached within timeout")
+
+
+def batch_avg_by_city(spark, lines: list[str]) -> dict:
+    """Job 3's batch answer, city -> (avg_salary, cnt)."""
+    raw = spark.createDataFrame([(l,) for l in lines], "value string")
+    kept = raw_text.filter_excluding_city(
+        raw_text.tokenize_csv(raw), "Jacksonville", drop_header=True
+    )
+    agg = raw_text.avg_salary_by_city(raw_text.extract_city_salary(kept))
+    return {r["city"]: (r["avg_salary"], r["cnt"]) for r in agg.collect()}
+
+
+def view_state(spark, path: str) -> dict:
+    return {
+        r["city"]: (r["avg_salary"], r["cnt"])
+        for r in spark.read.parquet(path).collect()
+    }
 
 
 def test_uppercase_stream_matches_batch(spark, tmp_path):
@@ -91,16 +107,7 @@ def test_avg_update_stream_final_state_matches_batch(spark, tmp_path):
             r["city"]: (r["avg_salary"], r["cnt"])
             for r in spark.table("t_avg").collect()
         }
-        batch_raw = spark.createDataFrame([(l,) for l in salary_lines()], "value string")
-        toks = raw_text.tokenize_csv(batch_raw)
-        kept = raw_text.filter_excluding_city(toks, "Jacksonville", drop_header=True)
-        batch_state = {
-            r["city"]: (r["avg_salary"], r["cnt"])
-            for r in raw_text.avg_salary_by_city(
-                raw_text.extract_city_salary(kept)
-            ).collect()
-        }
-        assert stream_state == batch_state
+        assert stream_state == batch_avg_by_city(spark, salary_lines())
         assert len(stream_state) == 99
     finally:
         q.stop()
@@ -249,20 +256,59 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 def test_foreach_batch_materialized_view(spark, tmp_path):
     """foreachBatch maintains a parquet 'materialized view' equal to
-    the streaming aggregate's full state after each batch."""
+    the streaming aggregate's full state after each batch; its state
+    runs on one shuffle partition without touching the session conf."""
     src = str(tmp_path / "mv_in")
     out = str(tmp_path / "mv_out")
     ckpt = str(tmp_path / "mv_ckpt")
     write_lines(spark, src, salary_lines(), "m1")
     agg = jobs.avg_by_key_update_stream(spark, src)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
     q = jobs.start_materialized_view(agg, out, ckpt)
     try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
         q.awaitTermination(120)
     finally:
         q.stop()
     view = spark.read.parquet(out)
     assert view.count() == 99
     assert set(view.columns) == {"city", "avg_salary", "cnt"}
+    assert view_state(spark, out) == batch_avg_by_city(spark, salary_lines())
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 1
+
+
+def test_materialized_view_restart_keeps_recorded_partitions(spark, tmp_path):
+    """A view checkpoint created with 4 state partitions (before the
+    view ran on one) restarts through ``start_materialized_view`` with
+    the 4 its offset metadata recorded, and the restored state plus the
+    new input still equals the batch answer."""
+    src = str(tmp_path / "mv4_in")
+    out = str(tmp_path / "mv4_out")
+    ckpt = str(tmp_path / "mv4_ckpt")
+    lines = salary_lines()
+    write_lines(spark, src, lines[:60], "m1")
+    agg = jobs.avg_by_key_update_stream(spark, src)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    q = (
+        agg.writeStream.foreachBatch(
+            lambda df, batch_id: df.write.format("noop").mode("overwrite").save()
+        )
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 4
+
+    write_lines(spark, src, lines[60:], "m2")
+    q = jobs.start_materialized_view(agg, out, ckpt)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 4
+    assert view_state(spark, out) == batch_avg_by_city(spark, lines)
 
 
 def test_streaming_session_window(spark, tmp_path):
@@ -544,6 +590,40 @@ def test_file_sink_exactly_once_across_restart(spark, tmp_path):
     assert got == want
 
 
+def test_text_stream_sink_exactly_once_across_restart(spark, tmp_path):
+    """Same restart contract through the engine's own starter, whose
+    local checkpoint runs on the FileSystem-based checkpoint manager:
+    a stop and restart on one checkpoint neither drops nor repeats a
+    record."""
+    from flink_s3_read_write_spark.sources import io
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run_once():
+        q = io.start_text_stream_sink(
+            jobs.uppercase_stream(spark, src), out, ckpt, trigger_seconds=0
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    write_lines(spark, src, [f"alpha{i}" for i in range(5)], "r1")
+    run_once()
+    write_lines(spark, src, [f"beta{i}" for i in range(5)], "r2")
+    run_once()
+    run_once()
+    got = sorted(r["value"] for r in spark.read.text(out).collect())
+    want = sorted([f"ALPHA{i}" for i in range(5)] + [f"BETA{i}" for i in range(5)])
+    assert got == want
+    # two batches committed in all: the restart with no new input
+    # re-ran nothing
+    commits = os.listdir(os.path.join(ckpt, "commits"))
+    assert sorted(f for f in commits if not f.startswith(".")) == ["0", "1"]
+
+
 def test_stream_bench_smoke(spark, tmp_path, monkeypatch):
     """tools/stream_bench.py end-to-end on a tiny input: all three jobs
     report positive rows/sec and the sidecar JSON is written."""
@@ -551,12 +631,12 @@ def test_stream_bench_smoke(spark, tmp_path, monkeypatch):
     import subprocess
     import sys
 
-    env = dict(**__import__("os").environ, SPARK_GRAFT_CPUS="4")
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
     out = subprocess.run(
         [sys.executable, "tools/stream_bench.py", "--lines", "20000",
          "--files", "2", "--repeat", "1", "--out", str(tmp_path / "sb.json")],
         capture_output=True, text=True, env=env, timeout=300,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = json.loads(out.stdout.strip().splitlines()[-1])
