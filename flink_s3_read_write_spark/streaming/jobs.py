@@ -38,9 +38,11 @@ started here go through ``sources.io._start_stream``, which gives a
 query checkpointed on the local filesystem Spark's FileSystem-based
 checkpoint manager: the default FileContext manager forks `readlink`
 processes on every rename when the native Hadoop library is absent.
-HDFS and S3A checkpoints keep Spark's default manager.  Known limit:
-Hadoop's local filesystem still forks one `chmod` per file it creates;
-only the native library removes that.
+HDFS and S3A checkpoints keep Spark's default manager.  On a local
+master, ``session.build_session`` also serves ``file:`` with a
+``LocalFileSystem`` that sets file modes through ``java.nio`` instead
+of forking `chmod` (10 forks per job-1 or job-2 trigger, 19 per job-3
+trigger without it); ``.crc`` files and modes are unchanged.
 """
 
 from __future__ import annotations
@@ -317,8 +319,7 @@ def start_materialized_view(
         dst = jvm.org.apache.hadoop.fs.Path(path)
         src = jvm.org.apache.hadoop.fs.Path(tmp)
         fs = dst.getFileSystem(hconf)
-        if fs.exists(dst):
-            fs.delete(dst, True)
+        fs.delete(dst, True)  # false, not an error, when there is no view yet
         fs.rename(src, dst)
 
     writer = (
